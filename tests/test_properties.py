@@ -1482,3 +1482,52 @@ def test_epoch_schedule_shares_and_budget_consistency(spark, tokens):
     total = sum(r["weight_ppm"] for r in out)
     assert 10**6 - len(out) < total <= 10**6
     assert all(r["epochs"] >= 0 for r in out)
+
+
+# Text for the source-id twin: printable ASCII plus every class
+# json.dumps escapes differently — C0 controls, DEL, '"', '\\', line
+# terminators (including U+0085/U+2028/U+2029), BMP non-ASCII and
+# astral characters (surrogate pairs in UTF-16). Lone surrogates are
+# excluded: they cannot cross into the JVM as UTF-8.
+SOURCE_TEXT = st.text(
+    alphabet=st.one_of(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+        st.characters(max_codepoint=0x1F),
+        st.sampled_from(['\x7f', '"', '\\', '\n', '\r', '\x85',
+                         '\u2028', '\u2029']),
+        st.characters(min_codepoint=0x80, max_codepoint=0xFFFF,
+                      exclude_categories=("Cs",)),
+        st.characters(min_codepoint=0x10000),
+    ),
+    max_size=10,
+)
+
+
+@SETTINGS
+@given(pairs=st.lists(st.tuples(SOURCE_TEXT, SOURCE_TEXT), min_size=1,
+                      max_size=6))
+@example(pairs=[("", ""), ("", "x"), ("\t\b\f", '"\\/'),
+                ("\x00\x1f\x7f", "\U0001F680 f\u00fcr \u2028")])
+def test_source_id_matches_sqlite_utils_hash_record(spark, pairs):
+    """The JVM source-id expression is byte-identical to
+    sqlite_utils.hash_record over {"name", "url"}. Applied straight to
+    name/url columns: the anchor regex of extract_sources cannot match
+    line terminators, so going through it would hide those cases."""
+    import hashlib
+    import json
+
+    from pyspark.sql import functions as F
+
+    from twitter_to_sqlite_spark.session import local_frame
+    from twitter_to_sqlite_spark.transforms.tweets import source_id
+
+    df = local_frame(spark, pairs, "name string, url string")
+    got = [r["id"] for r in
+           df.select(source_id(F.col("name"), F.col("url")).alias("id"))
+           .collect()]
+    want = [
+        hashlib.sha1(json.dumps({"name": n, "url": u}, separators=(",", ":"),
+                                sort_keys=True).encode("utf8")).hexdigest()
+        for n, u in pairs
+    ]
+    assert got == want

@@ -102,6 +102,45 @@ def test_watermark_advance_from_batch(spark, tmp_path):
     assert ws.get("home", "feed") == 9
 
 
+def test_watermark_concurrent_writers_keep_every_key(spark, tmp_path):
+    """Writers on one since_ids table (two syncs, or a sync plus a
+    capture) must not drop each other's rows: set() reads, merges and
+    swaps under the table lock, so every key survives with its running
+    maximum. More writer threads than cores, with a short switch
+    interval, so unlocked read-merge-swaps would interleave."""
+    import os
+    import sys
+    import threading
+
+    ws = C.WatermarkStore(spark, str(tmp_path / "since_ids"))
+    n = (os.cpu_count() or 1) + 1
+    start = threading.Barrier(n)
+    errors = []
+
+    def writer(i):
+        try:
+            start.wait(timeout=60)
+            for v in (10 + i, 30 + i, 20 + i):
+                ws.set("user", f"id:{i}", v)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert {i: ws.get("user", f"id:{i}") for i in range(n)} == {
+        i: 30 + i for i in range(n)}
+
+
 def test_migration_runner_applied_once(spark, tmp_path):
     runs = []
     migs = [

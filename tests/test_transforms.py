@@ -151,3 +151,28 @@ def test_sources_hash_non_ascii_matches_sqlite_utils(spark):
     ).hexdigest()
     assert got["id"] == expected and got["name"] == name
     assert facts.collect()[0]["source"] == expected
+
+
+def test_chunk_parse_parity_single_partition_and_no_python_eval(spark):
+    """The driver-chunk parse (Arrow LocalRelation + from_json) yields
+    exactly the rows of the file reader over the same schema, as one
+    partition, and no save_tweets output plans a Python evaluator."""
+    from twitter_to_sqlite_spark import commands as C
+
+    with open(FIXTURE) as f:
+        rows = [json.loads(line) for line in f if line.strip()]
+    got = C.tweets_dataframe(spark, rows)
+    want = spark.read.schema(schemas.tweet_schema()).json(FIXTURE)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert sorted(got.collect(), key=lambda r: r["id"]) == sorted(
+        want.collect(), key=lambda r: r["id"])
+
+    assert got.rdd.getNumPartitions() == 1
+    partitioning = got._jdf.queryExecution().executedPlan().outputPartitioning()
+    assert partitioning.toString() == "SinglePartition"
+
+    for name, df in TT.save_tweets(got).items():
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, name

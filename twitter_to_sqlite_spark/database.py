@@ -14,8 +14,10 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from twitter_to_sqlite_spark.operators import checkpoint as CP
 from twitter_to_sqlite_spark.operators import sinks
@@ -23,6 +25,15 @@ from twitter_to_sqlite_spark.operators import sinks
 # count_history tracked types (reference utils.py:25-33 — favourites/
 # statuses deliberately untracked as too noisy).
 COUNT_HISTORY_TYPES = {"followers": 1, "friends": 2, "listed": 3}
+
+# count_history as record_user_counts writes it; read back with this
+# schema instead of a schema-inference job over the table.
+COUNT_HISTORY_SCHEMA = T.StructType([
+    T.StructField("type", T.IntegerType()),
+    T.StructField("user", T.LongType()),
+    T.StructField("datetime", T.StringType()),
+    T.StructField("count", T.LongType()),
+])
 
 
 class TweetDatabase:
@@ -103,7 +114,8 @@ class TweetDatabase:
         from the most recent stored observation.
 
         Incremental-correct: compares against the STORED latest (not a
-        batch-local lag) — SURVEY §7.3 hard-part 4.
+        batch-local lag) — SURVEY §7.3 hard-part 4. The changed rows are
+        evaluated once: persisted, counted, appended from the cache.
         """
         now = now_iso or time.strftime("%Y-%m-%dT%H:%M:%S+00:00", time.gmtime())
         melted = None
@@ -117,7 +129,11 @@ class TweetDatabase:
             melted = piece if melted is None else melted.unionByName(piece)
         melted = melted.filter(F.col("count").isNotNull())
 
-        existing = self.read("count_history")
+        existing = (
+            self.spark.read.schema(COUNT_HISTORY_SCHEMA)
+            .parquet(self.path("count_history"))
+            if self.exists("count_history") else None
+        )
         if existing is not None:
             latest = (
                 existing.groupBy("type", "user")
@@ -128,9 +144,13 @@ class TweetDatabase:
                 .filter(F.col("__prev").isNull() | (F.col("count") != F.col("__prev")))
                 .drop("__prev")
             )
-        changed = melted.count()
-        if changed:
-            self.append("count_history", melted)
+        melted = melted.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            changed = melted.count()
+            if changed:
+                self.append("count_history", melted)
+        finally:
+            melted.unpersist()
         return changed
 
     # ------------------------------------------------------ text search

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -57,6 +58,14 @@ def get_spark(app_name: str = "twitter_to_sqlite_spark", cpus: str | None = None
         .config("spark.sql.codegen.cache.maxEntries",
                 os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
         .config("spark.ui.enabled", "false")
+        # A persisted frame is planned with AQE's final-stage coalescing
+        # off by default, so it keeps its raw shuffle partitioning and
+        # hands it to every plan that reads it: a first write or an
+        # append straight from save_tweet_batch's persisted outputs
+        # then writes one file per shuffle partition, however few the
+        # rows. Letting AQE coalesce cached plans sizes those files to
+        # the data, as for an unpersisted plan.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Some driver rounds generated events.parquet as
         # TIMESTAMP(NANOS), which the vectorized reader rejects without
@@ -79,3 +88,28 @@ def get_spark(app_name: str = "twitter_to_sqlite_spark", cpus: str | None = None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver-side rows → DataFrame over an Arrow-backed LocalRelation.
+
+    ``createDataFrame(<list>)`` and ``parallelize`` plan their rows as
+    a Python RDD, so the first action on them starts a Python worker
+    process per task (≈1 CPU s for a one-row frame). A
+    ``pyarrow.Table`` is shipped to the JVM as Arrow batches and
+    planned as a LocalRelation instead: no worker, no Arrow conf
+    needed. ``rows`` are tuples in ``schema`` order (a StructType or
+    a DDL string).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -20,13 +20,8 @@ per-tweet loop.
 
 from __future__ import annotations
 
-import hashlib
-import json
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # Twitter created_at format: 'Wed Sep 04 13:51:55 +0000 2019'.
 # Spark's parser accepts day-of-week ('E') only when formatting, so we
@@ -93,10 +88,11 @@ def transform_tweet(df: DataFrame) -> DataFrame:
 
     Expects tweet-struct columns at the top level (post-flattening).
     """
-    out = df.withColumn(
-        "full_text",
-        html_unescape(expand_entities(F.col("full_text"), F.col("entities.urls"))),
-    ).withColumn("created_at", iso_timestamp(F.col("created_at")))
+    out = df.withColumns({
+        "full_text": html_unescape(
+            expand_entities(F.col("full_text"), F.col("entities.urls"))),
+        "created_at": iso_timestamp(F.col("created_at")),
+    })
     drops = [c for c in TWEET_DROP_COLS if c in out.columns]
     return out.drop(*drops)
 
@@ -104,63 +100,87 @@ def transform_tweet(df: DataFrame) -> DataFrame:
 def transform_user(df: DataFrame) -> DataFrame:
     """P3 (transform_user, utils.py:284-296): expand description/url
     via entities.*.urls, ISO created_at, drop entities/status/id_str."""
-    out = (
-        df.withColumn(
-            "description",
-            expand_entities(F.col("description"), F.col("entities.description.urls")),
-        )
-        .withColumn("url", expand_entities(F.col("url"), F.col("entities.url.urls")))
-        .withColumn("created_at", iso_timestamp(F.col("created_at")))
-    )
+    out = df.withColumns({
+        "description": expand_entities(
+            F.col("description"), F.col("entities.description.urls")),
+        "url": expand_entities(F.col("url"), F.col("entities.url.urls")),
+        "created_at": iso_timestamp(F.col("created_at")),
+    })
     drops = [c for c in USER_DROP_COLS if c in out.columns]
     return out.drop(*drops)
 
 
-def _hash_record_sha1():
-    """Exact sqlite_utils.hash_record twin: sha1 of
-    ``json.dumps(record, separators=(",", ":"), sort_keys=True,
-    default=repr)`` — note json.dumps' default ensure_ascii escapes
-    non-ASCII to \\uXXXX, which Spark's to_json does not, so ids over
-    non-ASCII client names would diverge with a pure-JVM hash. A
-    vectorized Pandas UDF reproduces the byte stream exactly; it runs
-    only over the DISTINCT (name, url) pairs (dozens of rows), never
-    the fact table."""
+# json.dumps' two-character escapes, keyed by UTF-16 code unit.
+_JSON_SHORT_ESCAPES = {
+    0x22: '\\"', 0x5C: "\\\\", 0x0A: "\\n", 0x0D: "\\r",
+    0x09: "\\t", 0x08: "\\b", 0x0C: "\\f",
+}
 
-    @pandas_udf("string")
-    def hash_source(name: pd.Series, url: pd.Series) -> pd.Series:
-        def h(n, u):
-            payload = json.dumps(
-                {"name": n, "url": u},
-                separators=(",", ":"), sort_keys=True, default=repr,
-            )
-            return hashlib.sha1(payload.encode("utf8")).hexdigest()
 
-        return pd.Series([h(n, u) for n, u in zip(name, url)])
+def json_string_ascii(s: Column) -> Column:
+    """``json.dumps(s)`` (default ``ensure_ascii=True``) as a Column:
+    the quoted JSON string literal with every non-printable-ASCII
+    character escaped exactly as Python escapes it.
 
-    return hash_source
+    Spark's to_json keeps non-ASCII raw, so this walks the UTF-16 code
+    units instead: ``hex(encode(s, 'UTF-16BE'))`` cut into 4-hex-digit
+    units, then per unit printable ASCII is kept, the seven short
+    escapes apply, and everything else becomes ``\\uxxxx`` (lowercase
+    hex). Astral characters are two units in UTF-16, so they come out
+    as the surrogate pair json.dumps writes. The empty string walks an
+    empty array; null is JSON ``null``.
+    """
+    units = F.regexp_extract_all(
+        F.hex(F.encode(s, "UTF-16BE")), F.lit("([0-9A-F]{4})"), 1)
+
+    def escape(unit: Column) -> Column:
+        code = F.conv(unit, 16, 10).cast("int")
+        out = F.when(
+            (code >= 0x20) & (code < 0x7F), F.char(code)
+        ).otherwise(F.concat(F.lit("\\u"), F.lower(unit)))
+        for c, esc in _JSON_SHORT_ESCAPES.items():
+            out = F.when(code == c, F.lit(esc)).otherwise(out)
+        return out
+
+    body = F.array_join(F.transform(units, escape), "")
+    return F.when(s.isNull(), F.lit("null")).otherwise(
+        F.concat(F.lit('"'), body, F.lit('"')))
+
+
+def source_id(name: Column, url: Column) -> Column:
+    """Exact ``sqlite_utils.hash_record`` twin for a source row: sha1
+    of ``json.dumps({"name": name, "url": url}, separators=(",", ":"),
+    sort_keys=True)`` — byte-identical ids, including the ensure_ascii
+    escaping of non-ASCII client names (see json_string_ascii). Pure
+    Column expression: runs inside the JVM plan, no Python worker."""
+    payload = F.concat(
+        F.lit('{"name":'), json_string_ascii(name),
+        F.lit(',"url":'), json_string_ascii(url), F.lit("}"),
+    )
+    return F.sha1(F.encode(payload, "UTF-8"))
 
 
 def extract_sources(tweets: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P4 (extract_and_save_source, utils.py:668-673): parse the source
     anchor tag into a {url,name} dimension keyed by sha1 of the
     canonical row JSON (sqlite_utils hash_id semantics, including
-    ensure_ascii escaping — see _hash_record_sha1), and rewrite the
-    fact column to that key.
+    ensure_ascii escaping — see source_id), and rewrite the fact
+    column to that key.
 
     Returns (sources_dim, tweets_with_fk). Broadcast-sized dim at any
-    scale (distinct clients are few); the fact rewrite is a broadcast
-    join on the parsed (name, url) pair, fully JVM-side.
+    scale (distinct clients are few); the id is a Column expression
+    over the distinct (name, url) pairs and the fact rewrite a
+    broadcast join on that pair, so the whole step stays in the JVM.
     """
-    parsed = tweets.withColumn(
-        "__sname", F.regexp_extract(F.col("source"), SOURCE_RE, 2)
-    ).withColumn(
-        "__surl", F.regexp_extract(F.col("source"), SOURCE_RE, 1)
-    )
+    parsed = tweets.withColumns({
+        "__sname": F.regexp_extract(F.col("source"), SOURCE_RE, 2),
+        "__surl": F.regexp_extract(F.col("source"), SOURCE_RE, 1),
+    })
     dim = (
         parsed.filter(F.col("source").isNotNull())
         .select("__sname", "__surl")
         .dropDuplicates()
-        .withColumn("__source_id", _hash_record_sha1()("__sname", "__surl"))
+        .withColumn("__source_id", source_id(F.col("__sname"), F.col("__surl")))
     )
     sources = dim.select(
         F.col("__source_id").alias("id"),
@@ -216,19 +236,16 @@ def save_tweets(raw: DataFrame) -> dict[str, DataFrame]:
     """
     nested_cols = ["retweeted_status", "quoted_status"]
     # 1. Parent rows: keep FK ids of nested statuses.
-    parents = raw
-    for c in nested_cols:
-        parents = parents.withColumn(c, F.col(c + ".id"))
-    parents = parents.withColumn("__depth", F.lit(0))
+    parents = raw.withColumns(
+        {c: F.col(c + ".id") for c in nested_cols} | {"__depth": F.lit(0)})
 
     # 2. Nested rows, promoted to top level (they lack nested fields
     #    themselves — API nests one deep).
     promoted = None
     for c in nested_cols:
-        p = _level1_statuses(raw, c)
-        for cc in nested_cols:
-            p = p.withColumn(cc, F.lit(None).cast("long"))
-        p = p.withColumn("__depth", F.lit(1))
+        p = _level1_statuses(raw, c).withColumns(
+            {cc: F.lit(None).cast("long") for cc in nested_cols}
+            | {"__depth": F.lit(1)})
         promoted = p if promoted is None else promoted.unionByName(p)
 
     all_tweets = parents.unionByName(promoted, allowMissingColumns=True)
@@ -266,9 +283,11 @@ def save_tweets(raw: DataFrame) -> dict[str, DataFrame]:
     # 6. fact table: normalize, extract source dim, rewrite FKs.
     tw = Window.partitionBy("id").orderBy(F.col("__depth").asc())
     facts = (
-        all_tweets.withColumn("user", F.col("user.id"))
-        .withColumn("place", F.col("place.id"))
-        .withColumn("__rn", F.row_number().over(tw))
+        all_tweets.withColumns({
+            "user": F.col("user.id"),
+            "place": F.col("place.id"),
+            "__rn": F.row_number().over(tw),
+        })
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__depth", "extended_entities")
     )
