@@ -274,19 +274,6 @@ def test_table_lock_breaks_stale_lock_and_times_out_on_live(tmp_path):
     os.unlink(f"{path}.__lock")
 
 
-@pytest.mark.skipif(not S.HAS_DELTA, reason="delta-spark not installed")
-def test_delta_merge_fast_path(spark, tmp_path):
-    """When delta-spark is installed and the table is Delta, upserts go
-    through a transactional MERGE (no rename swap, object-store safe)."""
-    path = str(tmp_path / "dtbl")
-    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "id long, v string, ver long")
-    b1.write.format("delta").save(path)
-    b2 = spark.createDataFrame([(2, "b2", 2), (3, "c", 2)], "id long, v string, ver long")
-    assert S._delta_merge(spark, b2, path, ["id"], "ver")
-    out = {r["id"]: r["v"] for r in spark.read.format("delta").load(path).collect()}
-    assert out == {1: "a", 2: "b2", 3: "c"}
-
-
 def test_write_swap_failed_swap_restores_original(spark, tmp_path, monkeypatch):
     """If the tmp→path rename fails mid-swap, the displaced original
     must be renamed back and the fresh tmp left on disk — no code path

@@ -51,7 +51,8 @@ class TweetDatabase:
         return os.path.exists(self.path(name))
 
     def read(self, name: str) -> DataFrame | None:
-        return self.spark.read.parquet(self.path(name)) if self.exists(name) else None
+        return (sinks.read_table(self.spark, self.path(name))
+                if self.exists(name) else None)
 
     def table_names(self) -> list[str]:
         return sorted(

@@ -2,21 +2,29 @@
 
 The reference keeps a ``since_ids(type, key, since_id)`` high-water
 mark table (utils.py:371-387, 214-222) and an applied-``migrations``
-log (utils.py:43-66). Here both are tiny keyed parquet tables managed
-with the same upsert plan as the data tables. In streaming mode,
-Structured Streaming's own checkpoint dir supersedes since_ids.
+log (utils.py:43-66). Here both are tiny parquet tables read and
+written on the driver with pyarrow — a few rows need no Spark job —
+under the same ``table_lock`` as every table writer, committed by the
+same directory swap (``sinks.swap_in``). Their footers carry Spark's
+row schema, so Spark readers see the columns and types a Spark writer
+would have left. In streaming mode, Structured Streaming's own
+checkpoint dir supersedes since_ids.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from twitter_to_sqlite_spark.operators.sinks import table_lock, write_swap
-from twitter_to_sqlite_spark.session import local_frame
+from twitter_to_sqlite_spark.operators.sinks import (
+    SPARK_SCHEMA_KEY, swap_in, table_lock)
 
 # Reference endpoint-type registry, utils.py:19-24.
 SINCE_ID_TYPES = {"user": 1, "home": 2, "mentions": 3, "search": 4}
@@ -33,6 +41,28 @@ MIGRATIONS_SCHEMA = T.StructType([
 ])
 
 
+def _read_rows(path: str, schema: T.StructType) -> list[dict]:
+    """All rows of a small parquet table, read on the driver."""
+    if not os.path.exists(path):
+        return []
+    return pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
+
+
+def _write_rows(path: str, schema: T.StructType, rows: list[dict]) -> None:
+    """Replace the table at ``path`` with ``rows``: one parquet file
+    written on the driver, committed by ``swap_in``. The caller holds
+    the table's ``table_lock``."""
+    arrow = to_arrow_schema(schema).with_metadata(
+        {SPARK_SCHEMA_KEY: schema.json()})
+    table = pa.Table.from_pylist(rows, schema=arrow)
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.snappy.parquet"))
+
+    swap_in(path, write)
+
+
 class WatermarkStore:
     """since_ids checkpoint table (C1/C2).
 
@@ -47,35 +77,21 @@ class WatermarkStore:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame:
-        if os.path.exists(self.path):
-            return self.spark.read.schema(SINCE_IDS_SCHEMA).parquet(self.path)
-        return local_frame(self.spark, [], SINCE_IDS_SCHEMA)
+    def _marks(self) -> dict[tuple[int, str], int]:
+        return {(r["type"], r["key"]): r["since_id"]
+                for r in _read_rows(self.path, SINCE_IDS_SCHEMA)}
 
     def get(self, type_name: str, key: str) -> int | None:
-        t = SINCE_ID_TYPES[type_name]
-        rows = (
-            self._read()
-            .filter((F.col("type") == t) & (F.col("key") == key))
-            .select("since_id")
-            .collect()
-        )
-        return rows[0][0] if rows else None
+        return self._marks().get((SINCE_ID_TYPES[type_name], key))
 
     def set(self, type_name: str, key: str, since_id: int) -> None:
-        t = SINCE_ID_TYPES[type_name]
-        incoming = local_frame(
-            self.spark, [(t, key, int(since_id))], SINCE_IDS_SCHEMA
-        )
+        k, v = (SINCE_ID_TYPES[type_name], key), int(since_id)
         with table_lock(self.path):
-            merged = (
-                self._read()
-                .unionByName(incoming)
-                .groupBy("type", "key")
-                .agg(F.max("since_id").alias("since_id"))
-                .select(*[F.col(f.name).cast(f.dataType) for f in SINCE_IDS_SCHEMA])
-            )
-            write_swap(merged.coalesce(1), self.path)
+            marks = self._marks()
+            marks[k] = max(marks.get(k, v), v)
+            _write_rows(self.path, SINCE_IDS_SCHEMA, [
+                {"type": t, "key": s, "since_id": m}
+                for (t, s), m in sorted(marks.items())])
 
     def advance_from(self, df: DataFrame, type_name: str, key: str,
                      id_col: str = "id") -> int | None:
@@ -101,27 +117,25 @@ class MigrationRunner:
         self.spark = spark
         self.path = path
 
+    def _log(self) -> dict[str, str]:
+        return {r["name"]: r["applied"]
+                for r in _read_rows(self.path, MIGRATIONS_SCHEMA)}
+
     def applied(self) -> set[str]:
-        if os.path.exists(self.path):
-            return {
-                r["name"]
-                for r in self.spark.read.schema(MIGRATIONS_SCHEMA).parquet(self.path).collect()
-            }
-        return set()
+        return set(self._log())
 
     def run(self, migrations: list[tuple]) -> list[str]:
         with table_lock(self.path):
-            done = self.applied()
+            log = self._log()
             ran: list[str] = []
             for name, fn in migrations:
-                if name in done:
+                if name in log:
                     continue
                 fn(self.spark)
                 ran.append(name)
             if ran:
-                now = F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss")
-                new = local_frame(
-                    self.spark, [(n,) for n in sorted(done | set(ran))], "name string"
-                ).withColumn("applied", now)
-                write_swap(new.coalesce(1), self.path)
+                now = time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime())
+                log.update(dict.fromkeys(ran, now))
+                _write_rows(self.path, MIGRATIONS_SCHEMA, [
+                    {"name": n, "applied": t} for n, t in sorted(log.items())])
         return ran

@@ -2,36 +2,34 @@
 reference expressed as DataFrame plans + parquet writers.
 
 The reference's storage semantics are SQLite INSERT OR REPLACE /
-INSERT OR IGNORE keyed by pk. On a lake they become MERGE (Delta) or,
-on pure parquet — what the driver's testdata uses — a deterministic
-union + window dedup. Both shapes are implemented here; the plan
-builders (``*_plan``) are pure and oracle-testable, the ``write_*``
-helpers do the I/O.
+INSERT OR IGNORE keyed by pk. On a parquet lake they become a
+deterministic union + window dedup; the plan builders (``*_plan``) are
+pure and oracle-testable, the ``write_*`` helpers do the I/O.
 
 Scale notes: last-write-wins is a single window shuffle partitioned by
-pk — the same shape Delta's MERGE uses internally. For a 100 TB fact
-table, partition the table by a time column and MERGE only the
-touched partitions (see ``write_upsert``'s partition pruning).
+pk — the same shape a lakehouse MERGE uses internally. For a 100 TB
+fact table, partition the table by a time column and MERGE only the
+touched partitions (see ``write_upsert_partitioned``).
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import shutil
-import threading
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-#: Delta Lake fast-path availability. When delta-spark is installed and
-#: the target is a Delta table, keyed upserts run as a transactional
-#: MERGE (object-store-safe commit) instead of the parquet rename swap.
-HAS_DELTA = importlib.util.find_spec("delta") is not None
+#: Footer key under which Spark's parquet writer stores each file's row
+#: schema as JSON (partition columns excluded).
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def upsert_plan(existing: DataFrame, incoming: DataFrame, keys: list[str],
@@ -166,9 +164,7 @@ def table_lock(path: str, timeout: float = 120.0, poll: float = 0.05):
 
     Scope: the lock must cover the READ of the existing table as well
     as the swap — locking only the swap still loses updates (two
-    writers both read the pre-merge table). On Delta tables this is
-    unnecessary: optimistic concurrency is handled by the commit
-    protocol (see ``_delta_merge``).
+    writers both read the pre-merge table).
     """
     lock = f"{path}.__lock"
     parent = os.path.dirname(path)
@@ -240,67 +236,62 @@ def table_lock(path: str, timeout: float = 120.0, poll: float = 0.05):
             pass
 
 
-def _delta_merge(spark, incoming: DataFrame, path: str, keys: list[str],
-                 version_col: str) -> bool:
-    """Transactional keyed upsert via Delta MERGE when available.
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips when it lists a table."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
 
-    Returns True iff the fast-path applied: delta-spark importable AND
-    ``path`` is a Delta table. The MERGE condition reproduces
-    ``upsert_plan``'s K1 ordering — per-key latest incoming row wins,
-    and it beats the stored row on version ties (WHEN MATCHED guarded
-    by ``s.ver >= t.ver`` for persisted version columns; dunder
-    bookkeeping versions aren't stored, so matched rows always update).
-    Delta's optimistic concurrency makes this safe on object stores
-    with no rename and no advisory lock — concurrent writers conflict
-    at commit time and retry, which is exactly the guarantee the
-    parquet path approximates with :func:`table_lock`.
+
+def _first_data_file(path: str) -> str | None:
+    """The file whose footer Spark's default schema inference reads
+    (``mergeSchema`` off, no summary files, which Spark does not write
+    by default): the first data file in path order."""
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found += [os.path.join(root, f) for f in files if not _hidden(f)]
+    return min(found, default=None)
+
+
+def read_table(spark, path: str, string_partitions: bool = False) -> DataFrame:
+    """Read the parquet table at ``path`` with its schema declared,
+    taken on the driver from one file's footer. ``spark.read.parquet``
+    infers the same schema from the same footer, but as a Spark job; a
+    table whose footer lacks the key was not written by Spark and pays
+    that one inference read.
+
+    Partition columns are left to Spark's discovery, which types them as
+    an inferring read would. The write paths pass ``string_partitions``:
+    partition columns are then declared strings, so directory names
+    round-trip verbatim. Inference would turn ``day=00`` into int 0,
+    which casts back to "0"; an IN-filter on '00' then matches nothing
+    and the partition swap replaces a full directory with only the
+    incoming rows.
     """
-    if not HAS_DELTA:
-        return False
-    from delta.tables import DeltaTable  # deferred: optional dep
-
-    try:
-        is_delta = DeltaTable.isDeltaTable(spark, path)
-    except Exception:
-        # delta-spark the PYTHON package being importable does not mean
-        # the SESSION has the Delta jars/extension: on a vanilla
-        # SparkSession the JVM class resolves to a py4j JavaPackage and
-        # this call raises (TypeError). Fall back to the parquet path
-        # instead of failing every upsert in such environments.
-        return False
-    if not is_delta:
-        return False
-    # MERGE requires unique source keys: keep the latest per pk.
-    w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
-    src = (
-        incoming.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    persisted_version = not version_col.startswith("__")
-    if not persisted_version:
-        src = src.drop(version_col)
-    cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    m = DeltaTable.forPath(spark, path).alias("t").merge(src.alias("s"), cond)
-    if persisted_version:
-        m = m.whenMatchedUpdateAll(condition=f"s.{version_col} >= t.{version_col}")
+    f = _first_data_file(path)
+    meta = pq.read_schema(f).metadata if f else None
+    raw = (meta or {}).get(SPARK_SCHEMA_KEY.encode())
+    parts = _partition_cols(path)
+    if raw is not None:
+        schema = T.StructType.fromJson(json.loads(raw))
     else:
-        m = m.whenMatchedUpdateAll()
-    m.whenNotMatchedInsertAll().execute()
-    return True
+        schema = T.StructType([c for c in spark.read.parquet(path).schema
+                               if c.name not in parts])
+    if string_partitions:
+        for c in parts:
+            schema = schema.add(c, T.StringType())
+    return spark.read.schema(schema).parquet(path)
 
 
-def write_swap(df: DataFrame, path: str,
-               partition_by: list[str] | None = None) -> None:
-    """Executor-side rewrite of a parquet table whose plan may READ
-    from ``path`` itself: write the plan to a temp sibling directory,
-    then atomically swap it over the old one.
+def swap_in(path: str, write: Callable[[str], None]) -> None:
+    """Commit a new version of the table at ``path``: ``write(tmp)``
+    fills a temp sibling directory, which is then swapped over the old
+    one. Every whole-table writer commits through here — Spark plans
+    (:func:`write_swap`) and the driver-side checkpoint tables alike.
 
-    This is the scale-safe replacement for the collect()-then-rewrite
-    pattern — the table never crosses the driver; the merge runs fully
-    distributed and the swap is two directory renames (atomic on POSIX
-    and HDFS; on S3-style object stores, substitute a Delta/Iceberg
-    commit — same plan, transactional metadata swap instead of rename).
+    The swap is two directory renames (atomic on POSIX and HDFS; on
+    S3-style object stores, substitute a Delta/Iceberg commit — same
+    data, transactional metadata swap instead of rename).
     Crash-safety: a crash between the two renames leaves the old table
     at ``<path>.__old-*`` — recoverable, never half-written. Cleanup of
     ``old``/``tmp`` happens ONLY after the swap has fully succeeded; if
@@ -310,10 +301,7 @@ def write_swap(df: DataFrame, path: str,
     """
     tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
     old = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
+    write(tmp)
     displaced = False
     if os.path.exists(path):
         os.rename(path, old)
@@ -329,6 +317,21 @@ def write_swap(df: DataFrame, path: str,
     # Swap succeeded — now (and only now) drop the displaced copy.
     if displaced:
         shutil.rmtree(old, ignore_errors=True)
+
+
+def write_swap(df: DataFrame, path: str,
+               partition_by: list[str] | None = None) -> None:
+    """Executor-side rewrite of a parquet table whose plan may READ
+    from ``path`` itself, committed by :func:`swap_in`.
+
+    This is the scale-safe replacement for the collect()-then-rewrite
+    pattern — the table never crosses the driver; the merge runs fully
+    distributed and only the commit happens on the driver.
+    """
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    swap_in(path, w.parquet)
 
 
 def swap_partitions(tmp: str, path: str, partition_col: str) -> None:
@@ -391,17 +394,13 @@ def write_upsert_partitioned(spark, incoming: DataFrame, path: str,
     stable within a partition (true for tweets partitioned by
     created-date: a tweet's id fixes its date).
 
-    This is exactly what Delta MERGE does under partition predicates;
-    expressed here on plain parquet so the engine needs no extra
-    dependency. When delta-spark is installed and the table is Delta,
-    the MERGE fast-path runs instead (Delta prunes partitions from the
-    join keys itself). Parquet writers serialize on
-    :func:`table_lock` — the read of the live partitions and the
-    directory swap happen under one exclusive section, so concurrent
-    upserts can't lose each other's rows.
+    This is exactly what a lakehouse MERGE does under partition
+    predicates, expressed on plain parquet so the engine needs no extra
+    dependency. Writers serialize on :func:`table_lock` — the read of
+    the live partitions and the directory swap happen under one
+    exclusive section, so concurrent upserts can't lose each other's
+    rows.
     """
-    if _delta_merge(spark, incoming, path, keys, version_col):
-        return
     touched = [r[0] for r in incoming.select(partition_col).distinct().collect()]
     if not touched:
         return
@@ -410,58 +409,22 @@ def write_upsert_partitioned(spark, incoming: DataFrame, path: str,
                                    version_col, partition_col, touched)
 
 
-#: serializes the session-global partition-inference toggle across
-#: threads (see _read_no_infer).
-_NO_INFER_LOCK = threading.Lock()
-
-
-def _read_no_infer(spark, path: str) -> DataFrame:
-    """Read a parquet dataset with partition-column TYPE INFERENCE
-    off: directory names round-trip verbatim as strings. Inference
-    turns ``day=00`` into int 0, which casts back to the string "0" —
-    an IN-filter on '00' then silently matches NOTHING, and the
-    partition swap replaces a full directory with only the incoming
-    rows (observed data loss; pinned by
-    test_compact_table_preserves_partition_layout)."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    # Process-wide mutex: table_lock only serializes writers of the
-    # SAME table, so two maintenance paths on different tables could
-    # interleave their read-save-restore of this session-global conf
-    # and leave inference permanently off (every later read in the
-    # session then returns partition columns as strings). The lock
-    # makes the toggle atomic; concurrent plain readers still briefly
-    # see it off, as the comment below concedes.
-    with _NO_INFER_LOCK:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "false")
-        try:
-            df = spark.read.parquet(path)
-            df.schema  # force analysis while inference is off (classic
-            # mode analyzes reads eagerly anyway; this pins it — under
-            # Spark Connect, deferred analysis could otherwise run
-            # after the conf is restored). The toggle is
-            # session-global, so concurrent same-session readers
-            # briefly see it off — these are maintenance paths.
-            return df
-        finally:
-            spark.conf.set(key, prev)
-
-
 def _upsert_partitioned_locked(spark, incoming, path, keys, version_col,
                                partition_col, touched) -> None:
     if os.path.exists(path):
         # Legacy layout (table written before partitioning was enabled):
         # fall back to a plain full upsert without the partition column
         # — the UNLOCKED body, since this caller already holds the lock.
-        probe = _read_no_infer(spark, path)
+        probe = read_table(spark, path, string_partitions=True)
         if partition_col not in probe.columns:
             _upsert_locked(spark, incoming.drop(partition_col), path, keys,
                            version_col)
             return
         # Partition pruning: the IN-filter on the partition column means
-        # only touched directories are scanned. Inference is off (see
-        # _read_no_infer), so the cast to the incoming dtype is exact —
-        # repeated merges can't drift the schema or miss directories.
+        # only touched directories are scanned. Partition values are read
+        # verbatim (see read_table), so the cast to the incoming dtype is
+        # exact — repeated merges can't drift the schema or miss
+        # directories.
         in_type = dict(incoming.dtypes)[partition_col]
         # Null-safe membership: a NULL partition value in the batch
         # lands in __HIVE_DEFAULT_PARTITION__, whose existing rows an
@@ -498,22 +461,18 @@ def write_upsert(spark, incoming: DataFrame, path: str, keys: list[str],
                  version_col: str) -> None:
     """Parquet-backed keyed upsert: read-modify-write via upsert_plan.
 
-    On Delta this is a single ``MERGE WHEN MATCHED UPDATE ALL WHEN NOT
-    MATCHED INSERT ALL``; parquet has no row-level transaction so we
-    rewrite. At scale, partition `path` by a stable bucket of the key
-    (or date) and rewrite only partitions present in `incoming` —
-    dynamic partition overwrite keeps the rewrite proportional to the
-    batch, not the table (write_upsert_partitioned).
+    A lakehouse table would run this as one ``MERGE WHEN MATCHED UPDATE
+    ALL WHEN NOT MATCHED INSERT ALL``; parquet has no row-level
+    transaction so we rewrite. At scale, partition `path` by a stable
+    bucket of the key (or date) and rewrite only partitions present in
+    `incoming` — dynamic partition overwrite keeps the rewrite
+    proportional to the batch, not the table (write_upsert_partitioned).
 
-    Concurrency: the Delta fast-path (when installed + table is Delta)
-    commits transactionally; the parquet path takes
-    :func:`table_lock` around read-merge-swap so two concurrent
-    upserts serialize (or the late one fails with
+    Concurrency: :func:`table_lock` is held around read-merge-swap so
+    two concurrent upserts serialize (or the late one fails with
     :class:`ConcurrentWriteError` after the lock timeout) — never an
     interleaved rename that drops rows.
     """
-    if _delta_merge(spark, incoming, path, keys, version_col):
-        return
     with table_lock(path):
         _upsert_locked(spark, incoming, path, keys, version_col)
 
@@ -521,7 +480,7 @@ def write_upsert(spark, incoming: DataFrame, path: str, keys: list[str],
 def _upsert_locked(spark, incoming, path, keys, version_col) -> None:
     """The read-merge-swap body; caller must hold :func:`table_lock`."""
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
+        existing = read_table(spark, path)
         out = upsert_plan(existing, incoming, keys, version_col)
     else:
         out = upsert_plan(incoming.limit(0), incoming, keys, version_col)
@@ -558,9 +517,9 @@ def compact_table(spark, path: str, target_bytes: int = 128 << 20,
     off the ``key=value`` directory structure and the rewrite goes
     through the same ``partitionBy`` — flattening them would strand
     rows outside the directories ``write_upsert_partitioned`` swaps.
-    Two desync traps are closed explicitly: partition-column TYPE
-    INFERENCE is disabled for the read (``month=01`` must not round-
-    trip to ``month=1`` — the upserters match directories by name),
+    Two desync traps are closed explicitly: partition columns are read
+    as strings (``month=01`` must not round-trip to ``month=1`` — the
+    upserters match directories by name),
     and a hot partition is salted into ``ceil(bytes/target)`` output
     files instead of collapsing into one task writing one giant file.
     """
@@ -579,7 +538,7 @@ def compact_table(spark, path: str, target_bytes: int = 128 << 20,
         sizes, per_dir = _walk_sizes(path)
         total = sum(sizes)
         n_out = max(1, -(-total // target_bytes))
-        df = _read_no_infer(spark, path)
+        df = read_table(spark, path, string_partitions=True)
         if len(part_cols) == 1:
             # Salt count per partition value via a depth-1 literal map
             # (a when-chain would nest one level per live partition —
@@ -661,8 +620,7 @@ def _partition_cols(path: str) -> list[str]:
 # ---------------------------------------------------------------------
 # Versioned tables: snapshot time travel over plain parquet.
 #
-# Delta/Iceberg are the production answer (the Delta MERGE fast-path
-# above is env-gated on delta-spark); this is the same COMMIT PROTOCOL
+# Delta/Iceberg are the production answer; this is the same COMMIT PROTOCOL
 # hand-rolled on a directory of immutable version snapshots + one
 # atomically-replaced manifest, so time travel, as-of reads, version
 # diffs (CDC between versions via relational.snapshot_diff) and
