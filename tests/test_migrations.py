@@ -87,7 +87,7 @@ def test_legacy_flat_table_upsert_fallback(spark, db):
         [(1, "new", "2020-02-03"), (2, "two", "2020-02-03")],
         "id long, full_text string, day string",
     ).withColumn("__batch", F.lit(1).cast("long"))
-    S.write_upsert_partitioned(
+    S.write_upsert(
         spark, incoming, db.path("tweets"), ["id"], "__batch", "day"
     )
     out = {r["id"]: r["full_text"] for r in db.read("tweets").collect()}

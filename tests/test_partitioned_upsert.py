@@ -20,7 +20,7 @@ def test_partitioned_upsert_rewrites_only_touched_partition(spark, tmp_path):
         [(1, "a", "2020-01-01"), (2, "b", "2020-01-02"), (3, "c", "2020-01-03")],
         "id long, v string, day string",
     ).withColumn("__batch", __import__("pyspark.sql.functions", fromlist=["lit"]).lit(1).cast("long"))
-    S.write_upsert_partitioned(spark, seed, path, ["id"], "__batch", "day")
+    S.write_upsert(spark, seed, path, ["id"], "__batch", "day")
     assert sorted(os.listdir(path)) >= ["day=2020-01-01", "day=2020-01-02", "day=2020-01-03"]
 
     before = {d: _files(path, d) for d in ("2020-01-01", "2020-01-02", "2020-01-03")}
@@ -32,7 +32,7 @@ def test_partitioned_upsert_rewrites_only_touched_partition(spark, tmp_path):
         [(2, "b2", "2020-01-02"), (9, "new", "2020-01-02")],
         "id long, v string, day string",
     ).withColumn("__batch", F.lit(2).cast("long"))
-    S.write_upsert_partitioned(spark, batch, path, ["id"], "__batch", "day")
+    S.write_upsert(spark, batch, path, ["id"], "__batch", "day")
 
     # partition-type inference reads `day` back as DATE; normalize
     out = {r["id"]: (r["v"], str(r["day"])) for r in spark.read.parquet(path).collect()}
@@ -59,7 +59,7 @@ def test_partitioned_upsert_prunes_read(spark, tmp_path):
     seed = spark.createDataFrame(
         [(1, "a", "d1"), (2, "b", "d2")], "id long, v string, day string"
     ).withColumn("__batch", F.lit(1).cast("long"))
-    S.write_upsert_partitioned(spark, seed, path, ["id"], "__batch", "day")
+    S.write_upsert(spark, seed, path, ["id"], "__batch", "day")
 
     existing = spark.read.parquet(path).filter(F.col("day").isin(["d2"]))
     plan = existing._jdf.queryExecution().explainString(
@@ -80,12 +80,12 @@ def test_partitioned_upsert_null_partition_preserved(spark, tmp_path):
         [(1, "a", None), (2, "b", "2020-01-02")],
         "id long, v string, day string",
     ).withColumn("__batch", F.lit(1).cast("long"))
-    S.write_upsert_partitioned(spark, seed, path, ["id"], "__batch", "day")
+    S.write_upsert(spark, seed, path, ["id"], "__batch", "day")
 
     batch = spark.createDataFrame(
         [(9, "n", None)], "id long, v string, day string"
     ).withColumn("__batch", F.lit(2).cast("long"))
-    S.write_upsert_partitioned(spark, batch, path, ["id"], "__batch", "day")
+    S.write_upsert(spark, batch, path, ["id"], "__batch", "day")
 
     # partition-type inference reads `day` back as DATE; normalize
     out = {

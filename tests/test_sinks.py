@@ -193,7 +193,7 @@ def test_write_upsert_partitioned_never_materializes_on_driver(spark, tmp_path, 
     b1 = spark.createDataFrame(
         [(1, "a", "d1", 1), (2, "b", "d2", 1)], "id long, v string, day string, ver long"
     )
-    S.write_upsert_partitioned(spark, b1, path, ["id"], "ver", "day")
+    S.write_upsert(spark, b1, path, ["id"], "ver", "day")
 
     orig_collect = DataFrame.collect
 
@@ -210,7 +210,7 @@ def test_write_upsert_partitioned_never_materializes_on_driver(spark, tmp_path, 
     )
     monkeypatch.setattr(DataFrame, "collect", guarded_collect)
     monkeypatch.setattr(SparkSession, "createDataFrame", no_create)
-    S.write_upsert_partitioned(spark, b2, path, ["id"], "ver", "day")
+    S.write_upsert(spark, b2, path, ["id"], "ver", "day")
     monkeypatch.undo()
     out = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert out == {1: "a", 2: "b2", 3: "c"}
@@ -393,7 +393,7 @@ def test_compact_table_preserves_partition_layout(spark, tmp_path):
     # in day=00 and confirm replace semantics (no duplicate rows)
     inc = spark.createDataFrame([(0, "00", 999)],
                                 "id long, day string, ver long")
-    S.write_upsert_partitioned(spark, inc, path, ["id"], "ver", "day")
+    S.write_upsert(spark, inc, path, ["id"], "ver", "day")
     after = spark.read.parquet(path)
     assert after.count() == 300
     assert after.filter("id = 0").count() == 1

@@ -126,7 +126,7 @@ def test_upserts_and_compaction_never_set_session_conf(spark, tmp_path,
             [(ver, "00", ver), (10 + ver, "01", ver)],
             "id long, day string, ver long")
         S.write_upsert(spark, batch, flat, ["id"], "ver")
-        S.write_upsert_partitioned(spark, batch.repartition(4), part,
+        S.write_upsert(spark, batch.repartition(4), part,
                                    ["id"], "ver", "day")
     assert S.compact_table(spark, part, target_bytes=1 << 20)
     assert calls == []

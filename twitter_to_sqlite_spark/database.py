@@ -55,54 +55,45 @@ class TweetDatabase:
                 if self.exists(name) else None)
 
     def table_names(self) -> list[str]:
+        """Live tables: not the hidden or ``.__tmp-`` staging siblings a
+        commit leaves behind while it runs or after it fails."""
         return sorted(
             d for d in os.listdir(self.root)
             if os.path.isdir(os.path.join(self.root, d))
+            and not d.startswith(".") and ".__" not in d
         )
 
     # --------------------------------------------------------- writes
     def upsert(self, name: str, df: DataFrame, keys: list[str],
                batch_id: int | None = None) -> None:
         """K1 INSERT OR REPLACE by pk."""
-        version = batch_id if batch_id is not None else time.time_ns()
-        sinks.write_upsert(
-            self.spark,
-            df.withColumn("__batch", F.lit(version).cast("long")),
-            self.path(name),
-            keys,
-            "__batch",
-        )
+        self._upsert(name, df, keys, batch_id, None)
 
     def upsert_partitioned(self, name: str, df: DataFrame, keys: list[str],
                            partition_col: str,
                            batch_id: int | None = None) -> None:
         """K1 upsert with partition pruning: only partitions present in
-        the batch are read and rewritten (sinks.write_upsert_partitioned)
-        — MERGE cost proportional to the batch, not the table."""
+        the batch are read and rewritten — MERGE cost proportional to
+        the batch, not the table."""
+        self._upsert(name, df, keys, batch_id, partition_col)
+
+    def _upsert(self, name, df, keys, batch_id, partition_col) -> None:
+        # Shared body: neither public upsert calls the other, so a
+        # wrapper around one of them never nests inside the other.
         version = batch_id if batch_id is not None else time.time_ns()
-        sinks.write_upsert_partitioned(
-            self.spark,
-            df.withColumn("__batch", F.lit(version).cast("long")),
-            self.path(name),
-            keys,
-            "__batch",
-            partition_col,
-        )
+        sinks.write_upsert(
+            self.spark, df.withColumn("__batch", F.lit(version).cast("long")),
+            self.path(name), keys, "__batch", partition_col)
 
     def insert_if_absent(self, name: str, df: DataFrame, keys: list[str]) -> None:
-        """K2 INSERT OR IGNORE by pk. Read + swap run under the table
-        lock — same single-writer guarantee as the K1 upserts."""
-        with sinks.table_lock(self.path(name)):
-            existing = self.read(name)
-            if existing is None:
-                out = df.dropDuplicates(keys)
-            else:
-                out = sinks.insert_if_absent_plan(existing, df, keys)
-            sinks.write_swap(out, self.path(name))
+        """K2 INSERT OR IGNORE by pk."""
+        sinks.rewrite(self.spark, self.path(name), lambda existing: (
+            df.dropDuplicates(keys) if existing is None
+            else sinks.insert_if_absent_plan(existing, df, keys)))
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         """K3 drop & recreate."""
-        sinks.write_overwrite(df, self.path(name))
+        sinks.write_swap(df, self.path(name))
 
     def append(self, name: str, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path(name))
@@ -117,6 +108,8 @@ class TweetDatabase:
         Incremental-correct: compares against the STORED latest (not a
         batch-local lag) — SURVEY §7.3 hard-part 4. The changed rows are
         evaluated once: persisted, counted, appended from the cache.
+        The history is appended to, not rewritten: a rewrite would make
+        every sync's write grow with the history.
         """
         now = now_iso or time.strftime("%Y-%m-%dT%H:%M:%S+00:00", time.gmtime())
         melted = None
@@ -130,28 +123,30 @@ class TweetDatabase:
             melted = piece if melted is None else melted.unionByName(piece)
         melted = melted.filter(F.col("count").isNotNull())
 
-        existing = (
-            self.spark.read.schema(COUNT_HISTORY_SCHEMA)
-            .parquet(self.path("count_history"))
-            if self.exists("count_history") else None
-        )
-        if existing is not None:
-            latest = (
-                existing.groupBy("type", "user")
-                .agg(F.max_by("count", "datetime").alias("__prev"))
-            )
-            melted = (
-                melted.join(latest, ["type", "user"], "left")
-                .filter(F.col("__prev").isNull() | (F.col("count") != F.col("__prev")))
-                .drop("__prev")
-            )
-        melted = melted.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            changed = melted.count()
-            if changed:
-                self.append("count_history", melted)
-        finally:
-            melted.unpersist()
+        # The lock spans the read of the stored latest and the append:
+        # two unlocked recorders would both append the same change, and
+        # their appends share one _temporary directory.
+        with sinks.table_lock(self.path("count_history")):
+            if self.exists("count_history"):
+                latest = (
+                    self.spark.read.schema(COUNT_HISTORY_SCHEMA)
+                    .parquet(self.path("count_history"))
+                    .groupBy("type", "user")
+                    .agg(F.max_by("count", "datetime").alias("__prev"))
+                )
+                melted = (
+                    melted.join(latest, ["type", "user"], "left")
+                    .filter(F.col("__prev").isNull()
+                            | (F.col("count") != F.col("__prev")))
+                    .drop("__prev")
+                )
+            melted = melted.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                changed = melted.count()
+                if changed:
+                    self.append("count_history", melted)
+            finally:
+                melted.unpersist()
         return changed
 
     # ------------------------------------------------------ text search

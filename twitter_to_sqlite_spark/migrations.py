@@ -37,12 +37,14 @@ def convert_source_column(db: TweetDatabase) -> int:
     n = unmigrated.count()
     if n == 0:
         return 0
-    sources, fixed = extract_sources(unmigrated)
-    db.upsert("sources", sources, ["id"])
-    migrated = tweets.filter(
-        ~F.col("source").startswith("<") | F.col("source").isNull()
-    ).unionByName(fixed)
-    sinks.write_swap(migrated, db.path("tweets"))
+    db.upsert("sources", extract_sources(unmigrated)[0], ["id"])
+
+    def migrate(live):
+        raw = F.col("source").startswith("<")
+        fixed = extract_sources(live.filter(raw))[1]
+        return live.filter(~raw | F.col("source").isNull()).unionByName(fixed)
+
+    sinks.rewrite(db.spark, db.path("tweets"), migrate)
     return n
 
 
@@ -53,15 +55,13 @@ def partition_tweets_by_day(db: TweetDatabase) -> int:
     tweets = db.read("tweets")
     if tweets is None or "day" in tweets.columns:
         return 0
-    day = (
-        F.coalesce(F.substring("created_at", 1, 10), F.lit("unknown"))
-        if "created_at" in tweets.columns
-        else F.lit("unknown")
-    )
-    out = tweets.withColumn("day", day)
-    n = out.count()
+    n = tweets.count()
     if n:
-        sinks.write_swap(out, db.path("tweets"), partition_by=["day"])
+        sinks.rewrite(db.spark, db.path("tweets"), lambda live: live.withColumn(
+            "day",
+            F.coalesce(F.substring("created_at", 1, 10), F.lit("unknown"))
+            if "created_at" in live.columns else F.lit("unknown"),
+        ), partition_by=["day"])
     return n
 
 

@@ -9,7 +9,13 @@ pure and oracle-testable, the ``write_*`` helpers do the I/O.
 Scale notes: last-write-wins is a single window shuffle partitioned by
 pk — the same shape a lakehouse MERGE uses internally. For a 100 TB
 fact table, partition the table by a time column and MERGE only the
-touched partitions (see ``write_upsert_partitioned``).
+touched partitions (``write_upsert`` with ``partition_col``).
+
+Every table rewrite — K1 upserts, K2 inserts, K3 overwrites,
+compaction, migrations, the streaming monitors — commits through one
+locked read-merge-commit, :func:`rewrite` (or :func:`write_swap` when
+the new table does not depend on the old), ending in one
+rename-with-rollback, :func:`_replace_dir`.
 """
 
 from __future__ import annotations
@@ -283,231 +289,169 @@ def read_table(spark, path: str, string_partitions: bool = False) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def swap_in(path: str, write: Callable[[str], None]) -> None:
-    """Commit a new version of the table at ``path``: ``write(tmp)``
-    fills a temp sibling directory, which is then swapped over the old
-    one. Every whole-table writer commits through here — Spark plans
-    (:func:`write_swap`) and the driver-side checkpoint tables alike.
-
-    The swap is two directory renames (atomic on POSIX and HDFS; on
-    S3-style object stores, substitute a Delta/Iceberg commit — same
-    data, transactional metadata swap instead of rename).
-    Crash-safety: a crash between the two renames leaves the old table
-    at ``<path>.__old-*`` — recoverable, never half-written. Cleanup of
-    ``old``/``tmp`` happens ONLY after the swap has fully succeeded; if
-    the second rename fails the displaced original is renamed back into
-    place and ``tmp`` is left on disk for inspection, so no code path
-    deletes the only surviving copy of the data.
+def _replace_dir(src: str, dst: str) -> None:
+    """Rename ``src`` over ``dst``, the rename-with-rollback every
+    commit ends in. A live ``dst`` first moves to a hidden sibling that
+    no reader lists; a crash between the two renames leaves it there,
+    recoverable, never half-written. It is deleted only once ``src`` is
+    in place; if that rename fails, ``dst`` is restored and ``src`` kept
+    for recovery, so no path deletes the only copy. Directory renames
+    are atomic on POSIX and HDFS; object stores would substitute a
+    Delta/Iceberg commit.
     """
-    tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-    old = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-    write(tmp)
-    displaced = False
-    if os.path.exists(path):
-        os.rename(path, old)
-        displaced = True
+    parent, name = os.path.split(dst)
+    old = os.path.join(parent, f".{name}.__old-{uuid.uuid4().hex[:8]}")
+    displaced = os.path.exists(dst)
+    if displaced:
+        os.rename(dst, old)
     try:
-        os.rename(tmp, path)
+        os.rename(src, dst)
     except BaseException:
-        # Roll back: restore the displaced original so the table is
-        # never lost; keep tmp (the freshly written data) for recovery.
-        if displaced and not os.path.exists(path):
-            os.rename(old, path)
+        if displaced and not os.path.exists(dst):
+            os.rename(old, dst)
         raise
-    # Swap succeeded — now (and only now) drop the displaced copy.
     if displaced:
         shutil.rmtree(old, ignore_errors=True)
 
 
-def write_swap(df: DataFrame, path: str,
-               partition_by: list[str] | None = None) -> None:
-    """Executor-side rewrite of a parquet table whose plan may READ
-    from ``path`` itself, committed by :func:`swap_in`.
-
-    This is the scale-safe replacement for the collect()-then-rewrite
-    pattern — the table never crosses the driver; the merge runs fully
-    distributed and only the commit happens on the driver.
-    """
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    swap_in(path, w.parquet)
+def swap_in(path: str, write: Callable[[str], None]) -> None:
+    """Commit a whole new table at ``path``: ``write(tmp)`` fills a
+    ``.__tmp-`` staging sibling, swapped in by :func:`_replace_dir`.
+    Spark plans and the driver-side checkpoint tables commit through
+    here. The caller holds the table's :func:`table_lock`."""
+    tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
+    write(tmp)
+    _replace_dir(tmp, path)
 
 
 def swap_partitions(tmp: str, path: str, partition_col: str) -> None:
-    """Move every ``<partition_col>=<value>`` directory from a freshly
-    written temp dataset into the live table, replacing same-valued
-    partitions — dynamic partition overwrite expressed as per-partition
-    directory swaps, so the merged plan can read the live partitions it
-    is replacing. Untouched partitions are never opened or moved.
-
-    Displaced partition dirs are renamed to a dot-prefixed name first
-    (hidden from Spark's partition discovery) so a concurrent reader
-    never sees ``day=X.__old`` parsed as a partition value.
-
-    Crash-safety mirrors ``write_swap``: if a swap fails mid-way, the
-    partition being swapped is renamed back into place and ``tmp`` is
-    LEFT ON DISK for recovery — no code path deletes the only copy of
-    freshly merged data. ``tmp`` is removed only after every partition
-    has swapped successfully.
-    """
+    """Dynamic partition overwrite as per-partition directory swaps, so
+    the merged plan can read the live partitions it replaces: move each
+    ``<partition_col>=<v>`` directory of the staging dataset ``tmp``
+    over the live one through :func:`_replace_dir`. Untouched partitions
+    are never opened; ``tmp`` is removed only after every swap."""
     os.makedirs(path, exist_ok=True)
     prefix = f"{partition_col}="
     for d in os.listdir(tmp):
-        if not d.startswith(prefix):
-            continue
-        src, dst = os.path.join(tmp, d), os.path.join(path, d)
-        displaced = os.path.join(path, f".{d}.__old")
-        if os.path.exists(displaced):
-            shutil.rmtree(displaced, ignore_errors=True)
-        moved = False
-        if os.path.exists(dst):
-            os.rename(dst, displaced)
-            moved = True
-        try:
-            os.rename(src, dst)
-        except BaseException:
-            # Restore the displaced live partition; keep tmp intact.
-            if moved and not os.path.exists(dst):
-                os.rename(displaced, dst)
-            raise
-        if moved:
-            shutil.rmtree(displaced, ignore_errors=True)
+        if d.startswith(prefix):
+            _replace_dir(os.path.join(tmp, d), os.path.join(path, d))
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def write_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Full-refresh overwrite — archive_* drop & recreate
-    (archive.py:240-248). Routed through the atomic swap so a plan
-    derived from the table itself can still full-refresh it."""
-    write_swap(df, path, partition_by)
-
-
-def write_upsert_partitioned(spark, incoming: DataFrame, path: str,
-                             keys: list[str], version_col: str,
-                             partition_col: str) -> None:
-    """Partition-pruned keyed upsert: the 100 TB MERGE shape.
-
-    Only the partitions present in `incoming` are read, merged, and
-    rewritten (dynamic partition overwrite); untouched partitions'
-    files are not opened, let alone rewritten. Requires the pk to be
-    stable within a partition (true for tweets partitioned by
-    created-date: a tweet's id fixes its date).
-
-    This is exactly what a lakehouse MERGE does under partition
-    predicates, expressed on plain parquet so the engine needs no extra
-    dependency. Writers serialize on :func:`table_lock` — the read of
-    the live partitions and the directory swap happen under one
-    exclusive section, so concurrent upserts can't lose each other's
-    rows.
-    """
-    touched = [r[0] for r in incoming.select(partition_col).distinct().collect()]
-    if not touched:
+def _commit(df: DataFrame, path: str, partition_by: list[str] | None,
+            dynamic: bool) -> None:
+    """Write ``df`` (which may read the live table) and commit it over
+    ``path``: whole, or with ``dynamic`` only the partitions it holds.
+    The caller holds the table's :func:`table_lock`."""
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    if not dynamic:
+        swap_in(path, w.parquet)
         return
-    with table_lock(path):
-        _upsert_partitioned_locked(spark, incoming, path, keys,
-                                   version_col, partition_col, touched)
-
-
-def _upsert_partitioned_locked(spark, incoming, path, keys, version_col,
-                               partition_col, touched) -> None:
-    if os.path.exists(path):
-        # Legacy layout (table written before partitioning was enabled):
-        # fall back to a plain full upsert without the partition column
-        # — the UNLOCKED body, since this caller already holds the lock.
-        probe = read_table(spark, path, string_partitions=True)
-        if partition_col not in probe.columns:
-            _upsert_locked(spark, incoming.drop(partition_col), path, keys,
-                           version_col)
-            return
-        # Partition pruning: the IN-filter on the partition column means
-        # only touched directories are scanned. Partition values are read
-        # verbatim (see read_table), so the cast to the incoming dtype is
-        # exact — repeated merges can't drift the schema or miss
-        # directories.
-        in_type = dict(incoming.dtypes)[partition_col]
-        # Null-safe membership: a NULL partition value in the batch
-        # lands in __HIVE_DEFAULT_PARTITION__, whose existing rows an
-        # isin() filter would silently DROP (NULL isin anything is
-        # NULL) — the swap would then replace the live null-partition
-        # directory with only the incoming rows. Data loss, not a
-        # corner case: any caller without tweets' coalesce-to-
-        # 'unknown' guard could hit it.
-        non_null = [t for t in touched if t is not None]
-        pred = (
-            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        )
-        if len(non_null) != len(touched):
-            pred = pred | F.col(partition_col).isNull()
-        existing = (
-            probe
-            .withColumn(partition_col, F.col(partition_col).cast(in_type))
-            .filter(pred)
-        )
-        merged = upsert_plan(existing, incoming, keys, version_col)
-    else:
-        merged = upsert_plan(incoming.limit(0), incoming, keys, version_col)
-    if version_col.startswith("__"):
-        merged = merged.drop(version_col)
-    # Write the merged touched partitions to a temp dataset (fully
-    # distributed — the plan reads the live partitions while they are
-    # still in place), then swap only those partition directories in.
     tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    swap_partitions(tmp, path, partition_col)
+    w.parquet(tmp)
+    swap_partitions(tmp, path, partition_by[0])
+
+
+def rewrite(spark, path: str, merge: Callable[[DataFrame | None], DataFrame],
+            partition_by: list[str] | None = None,
+            dynamic: bool = False) -> None:
+    """The one read-merge-commit every table rewrite goes through.
+
+    Under :func:`table_lock` it reads the live table (``None`` when
+    absent; partition columns as strings, see :func:`read_table`) and
+    commits ``merge(existing)``: whole, or with ``dynamic`` only the
+    ``partition_by[0]`` partitions it contains. A table with no
+    partition column on disk (the legacy flat layout) is committed
+    whole; ``merge`` sees that layout and shapes its rows to match.
+
+    The lock spans the read and the swap, so concurrent writers
+    serialize (a late one fails with :class:`ConcurrentWriteError` after
+    the timeout) and never drop each other's rows. It is not reentrant:
+    ``merge`` must not commit to ``path`` itself.
+    """
+    with table_lock(path):
+        existing = (read_table(spark, path, string_partitions=True)
+                    if os.path.exists(path) else None)
+        out = merge(existing)
+        if dynamic and existing is not None:
+            dynamic = partition_by[0] in existing.columns
+            partition_by = partition_by if dynamic else None
+        _commit(out, path, partition_by, dynamic)
+
+
+def write_swap(df: DataFrame, path: str,
+               partition_by: list[str] | None = None) -> None:
+    """Replace the table at ``path`` with ``df`` under its
+    :func:`table_lock` — K3 drop & recreate (archive.py:240-248) and the
+    derived index builds. ``df`` may read from ``path`` itself: the
+    table never crosses the driver, and only the commit runs there."""
+    with table_lock(path):
+        _commit(df, path, partition_by, dynamic=False)
 
 
 def write_upsert(spark, incoming: DataFrame, path: str, keys: list[str],
-                 version_col: str) -> None:
-    """Parquet-backed keyed upsert: read-modify-write via upsert_plan.
-
-    A lakehouse table would run this as one ``MERGE WHEN MATCHED UPDATE
-    ALL WHEN NOT MATCHED INSERT ALL``; parquet has no row-level
-    transaction so we rewrite. At scale, partition `path` by a stable
-    bucket of the key (or date) and rewrite only partitions present in
-    `incoming` — dynamic partition overwrite keeps the rewrite
-    proportional to the batch, not the table (write_upsert_partitioned).
-
-    Concurrency: :func:`table_lock` is held around read-merge-swap so
-    two concurrent upserts serialize (or the late one fails with
-    :class:`ConcurrentWriteError` after the lock timeout) — never an
-    interleaved rename that drops rows.
+                 version_col: str, partition_col: str | None = None) -> None:
+    """Keyed upsert (K1): :func:`upsert_plan` of the live table and
+    ``incoming``, committed by :func:`rewrite` — what a lakehouse runs
+    as ``MERGE WHEN MATCHED UPDATE ALL WHEN NOT MATCHED INSERT ALL``.
+    With ``partition_col`` only the partitions present in ``incoming``
+    are read, merged and swapped (the 100 TB MERGE shape), which needs
+    the pk stable within a partition (a tweet's id fixes its day).
     """
-    with table_lock(path):
-        _upsert_locked(spark, incoming, path, keys, version_col)
+    partitioned = partition_col is not None
+    if partitioned:
+        touched = [r[0] for r in
+                   incoming.select(partition_col).distinct().collect()]
+        if not touched:
+            return
 
+    def merge(existing: DataFrame | None) -> DataFrame:
+        new = incoming
+        if existing is None:
+            existing = incoming.limit(0)
+        elif partition_col in existing.columns:
+            # Only the touched partitions: the IN-filter prunes the scan
+            # to their directories. Partition values are read verbatim
+            # (see read_table), so the cast to the incoming dtype is
+            # exact. Membership is null-safe: a NULL partition value
+            # lands in __HIVE_DEFAULT_PARTITION__, whose live rows an
+            # isin() alone would drop (NULL isin anything is NULL),
+            # and the swap would then lose them.
+            non_null = [t for t in touched if t is not None]
+            pred = (F.col(partition_col).isin(non_null) if non_null
+                    else F.lit(False))
+            if len(non_null) != len(touched):
+                pred = pred | F.col(partition_col).isNull()
+            in_type = dict(incoming.dtypes)[partition_col]
+            existing = existing.withColumn(
+                partition_col, F.col(partition_col).cast(in_type)).filter(pred)
+        elif partitioned:
+            new = incoming.drop(partition_col)  # legacy flat layout
+        out = upsert_plan(existing, new, keys, version_col)
+        # A dunder version column is engine bookkeeping — don't persist
+        # it. Stored rows then carry no version; on the next merge they
+        # union as null, which sorts after any real incoming version
+        # under desc ordering, so incoming still beats stored (K1).
+        return out.drop(version_col) if version_col.startswith("__") else out
 
-def _upsert_locked(spark, incoming, path, keys, version_col) -> None:
-    """The read-merge-swap body; caller must hold :func:`table_lock`."""
-    if os.path.exists(path):
-        existing = read_table(spark, path)
-        out = upsert_plan(existing, incoming, keys, version_col)
-    else:
-        out = upsert_plan(incoming.limit(0), incoming, keys, version_col)
-    # A dunder version column is engine bookkeeping — don't persist
-    # it. Stored rows then carry no version; on the next merge they
-    # union as null, which sorts after any real incoming version
-    # under desc ordering, so incoming still beats stored (K1).
-    if version_col.startswith("__"):
-        out = out.drop(version_col)
-    # Executor-side rewrite + atomic swap: the merged table never
-    # crosses the driver (the old collect()/createDataFrame pattern
-    # capped tables at spark.driver.maxResultSize).
-    write_swap(out, path)
+    rewrite(spark, path, merge, [partition_col] if partitioned else None,
+            dynamic=partitioned)
 
 
 def compact_table(spark, path: str, target_bytes: int = 128 << 20,
                   min_files: int = 2) -> bool:
     """Small-file compaction for an upsert-maintained parquet table.
 
-    Every incremental upsert rewrites the table through ``write_swap``,
+    Every incremental upsert rewrites the table through ``rewrite``,
     but streaming ``foreachBatch`` sinks and partitioned upserts can
     still accumulate many small files — the classic long-running-table
     pathology (each scan pays per-file open/footer costs; at 100 TB a
     million 1 MB files is a listing storm). Compaction rewrites the
-    table into ``ceil(total_bytes / target_bytes)`` files via the same
-    crash-safe swap, under the same :func:`table_lock` as the writers
-    so it can run as online maintenance.
+    table into ``ceil(total_bytes / target_bytes)`` files through the
+    same :func:`rewrite` as the writers, so it can run as online
+    maintenance.
 
     No-ops (returns False) when the table already averages at least
     ``target_bytes / 2`` per file or has fewer than ``min_files`` —
@@ -516,7 +460,7 @@ def compact_table(spark, path: str, target_bytes: int = 128 << 20,
     Partitioned tables keep their layout: partition columns are read
     off the ``key=value`` directory structure and the rewrite goes
     through the same ``partitionBy`` — flattening them would strand
-    rows outside the directories ``write_upsert_partitioned`` swaps.
+    rows outside the directories a partitioned ``write_upsert`` swaps.
     Two desync traps are closed explicitly: partition columns are read
     as strings (``month=01`` must not round-trip to ``month=1`` — the
     upserters match directories by name),
@@ -530,15 +474,14 @@ def compact_table(spark, path: str, target_bytes: int = 128 << 20,
     if total / len(sizes) >= target_bytes / 2:
         return False
     part_cols = _partition_cols(path)
-    with table_lock(path):
-        # Re-size UNDER the lock: the pre-lock walk only decided the
+
+    def merge(df: DataFrame) -> DataFrame:
+        # Re-size under the lock: the pre-lock walk only decided the
         # cheap no-op; the write plan's bucket counts must match the
         # data actually read (a concurrent upsert may have landed a
         # new hot partition between the two).
         sizes, per_dir = _walk_sizes(path)
-        total = sum(sizes)
-        n_out = max(1, -(-total // target_bytes))
-        df = read_table(spark, path, string_partitions=True)
+        n_out = max(1, -(-sum(sizes) // target_bytes))
         if len(part_cols) == 1:
             # Salt count per partition value via a depth-1 literal map
             # (a when-chain would nest one level per live partition —
@@ -567,19 +510,19 @@ def compact_table(spark, path: str, target_bytes: int = 128 << 20,
             salt = F.pmod(
                 F.hash(*[F.col(c) for c in df.columns]), nb)
             n_tasks = max(1, sum(buckets.values())) if buckets else n_out
-            out = df.withColumn("__csalt", salt) \
+            return df.withColumn("__csalt", salt) \
                 .repartition(n_tasks, *part_cols, "__csalt") \
                 .drop("__csalt")
-        elif part_cols:
+        if part_cols:
             # Multi-level layouts: salting the top level would scatter
             # leaf directories across tasks and multiply output files;
             # plain repartition on the full partition key keeps one
             # task per leaf (hot single LEAF files stay unsplit — rare
             # for multi-level schemes, whose leaves are fine-grained).
-            out = df.repartition(max(1, n_out), *part_cols)
-        else:
-            out = df.repartition(n_out)
-        write_swap(out, path, partition_by=part_cols or None)
+            return df.repartition(max(1, n_out), *part_cols)
+        return df.repartition(n_out)
+
+    rewrite(spark, path, merge, part_cols or None)
     return True
 
 

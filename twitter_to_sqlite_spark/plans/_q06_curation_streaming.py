@@ -1596,10 +1596,10 @@ def q_stream_batch_agreement(spark, sf_dir):
     certificate: only the first gate pass in a process exercises the
     real engine; later passes in the same process replay the cached
     checksums, so a mid-process engine regression would go unnoticed
-    until a fresh process runs (the official driver gate and
-    tools/closing_battery.py both start fresh processes, which is
-    where the certificate is actually read; clear_caches(
-    include_infra=True) drops the cache for in-process re-runs). The foreachBatch twins' maintenance callables are driven
+    until a fresh process runs (the official driver gate starts a
+    fresh process, which is where the certificate is actually read;
+    clear_caches(include_infra=True) drops the cache for in-process
+    re-runs). The foreachBatch twins' maintenance callables are driven
     directly with the same three batches on every call. Every collect
     is bounded by the fixture constant; maintained tables live in a
     per-call tempdir removed before returning (the version_diff

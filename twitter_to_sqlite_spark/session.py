@@ -37,9 +37,9 @@ def get_spark(app_name: str = "twitter_to_sqlite_spark", cpus: str | None = None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Modest default so CLI use works on small hosts; bench.py and
-        # tools/scale_probe.py opt into 24g via SPARK_GRAFT_DRIVER_MEM
-        # (full-catalog runs hold checkpoint blocks for 85 queries).
+        # Modest default so CLI use works on small hosts; bench.py opts
+        # into 24g via SPARK_GRAFT_DRIVER_MEM (full-catalog runs hold
+        # checkpoint blocks for 85 queries).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # localCheckpoint blocks (k-means vectors, component-label
         # rounds, prefix-filter shingle sets) are freed by the

@@ -438,17 +438,10 @@ def drift_monitor(spark, counts_path: str, value_col: str = "quality",
     from twitter_to_sqlite_spark.operators import sinks
 
     def on_batch(batch_df, batch_id: int) -> None:
-        import os
-
         delta = score_bin_counts(batch_df, value_col, n_bins)
-        with sinks.table_lock(counts_path):
-            if os.path.exists(counts_path):
-                stored = spark.read.parquet(counts_path)
-                merged = stored.unionByName(delta).groupBy("bin").agg(
-                    F.sum("n").alias("n"))
-            else:
-                merged = delta
-            sinks.write_swap(merged, counts_path)
+        sinks.rewrite(spark, counts_path, lambda stored: (
+            delta if stored is None else stored.unionByName(delta)
+            .groupBy("bin").agg(F.sum("n").alias("n"))))
 
     return on_batch
 
@@ -460,7 +453,7 @@ def psi_vs_baseline(spark, counts_path: str, baseline_path: str,
     collects are bounded by construction, independent of stream
     length). Same Laplace smoothing and bin-ordered summation as the
     batch q_psi_drift oracle pair. Each table is read under its
-    advisory lock — drift_monitor's write_swap momentarily unlinks the
+    advisory lock — drift_monitor's commit momentarily unlinks the
     path between its two renames, so an unlocked read can race into
     PATH_NOT_FOUND mid-commit."""
     import math
@@ -506,17 +499,10 @@ def value_monitor(spark, counts_path: str, value_col: str = "quality"):
     from twitter_to_sqlite_spark.operators import sinks
 
     def on_batch(batch_df, batch_id: int) -> None:
-        import os
-
         delta = score_value_counts(batch_df, value_col)
-        with sinks.table_lock(counts_path):
-            if os.path.exists(counts_path):
-                stored = spark.read.parquet(counts_path)
-                merged = stored.unionByName(delta).groupBy("val").agg(
-                    F.sum("n").alias("n"))
-            else:
-                merged = delta
-            sinks.write_swap(merged, counts_path)
+        sinks.rewrite(spark, counts_path, lambda stored: (
+            delta if stored is None else stored.unionByName(delta)
+            .groupBy("val").agg(F.sum("n").alias("n"))))
 
     return on_batch
 
@@ -527,8 +513,8 @@ def ks_vs_baseline(spark, counts_path: str, baseline_path: str) -> float:
     face of the batch ks_drift query: D = sup over the merged score
     domain of |F_current − F_baseline|. Both tables are bounded by
     score cardinality (collects bounded by construction); reads take
-    each table's advisory lock because write_swap momentarily unlinks
-    the path between its renames."""
+    each table's advisory lock because a monitor's commit momentarily
+    unlinks the path between its renames."""
     from twitter_to_sqlite_spark.operators import sinks
 
     def load(path):
@@ -563,7 +549,7 @@ def maintain_rollup(spark, path: str, key_cols: list[str],
     the streaming face of ``relational.weighted_delta_agg`` +
     ``merge_agg_delta``. Each micro-batch aggregates ONLY its own
     rows into a delta and merges it with the stored partials under
-    the advisory table lock (read-merge-swap, single-writer by
+    the advisory table lock (``sinks.rewrite``, single-writer by
     construction); the base table is never rescanned, so maintenance
     cost per batch is O(|batch| + |touched groups|) at any table size.
 
@@ -582,18 +568,12 @@ def maintain_rollup(spark, path: str, key_cols: list[str],
     from twitter_to_sqlite_spark.operators import sinks
 
     def on_batch(batch_df, batch_id: int) -> None:
-        import os
-
         delta = R.weighted_delta_agg(
             batch_df.withColumn("__w", F.lit(1)),
             key_cols, "__w", value_col)
-        with sinks.table_lock(path):
-            if os.path.exists(path):
-                stored = spark.read.parquet(path)
-                merged = R.merge_agg_delta(stored, delta, key_cols)
-            else:
-                merged = delta.filter(F.col("n_rows") != 0)
-            sinks.write_swap(merged, path)
+        sinks.rewrite(spark, path, lambda stored: (
+            delta.filter(F.col("n_rows") != 0) if stored is None
+            else R.merge_agg_delta(stored, delta, key_cols)))
 
     return on_batch
 
@@ -622,24 +602,22 @@ def decay_monitor(spark, path: str, key_col: str = "user_id",
     prune_below = 2.0 ** -20
 
     def on_batch(batch_df, batch_id: int) -> None:
-        import os
-
         delta = (batch_df.filter(F.col(key_col).isNotNull())
                  .groupBy(key_col)
                  .agg(F.count(F.lit(1)).cast("double").alias("decayed")))
-        with sinks.table_lock(path):
-            if os.path.exists(path):
-                stored = spark.read.parquet(path).select(
-                    key_col,
-                    (F.col("decayed") * F.lit(float(decay)))
-                    .alias("decayed"))
-                merged = (stored.unionByName(delta)
-                          .groupBy(key_col)
-                          .agg(F.sum("decayed").alias("decayed"))
-                          .filter(F.col("decayed") >= prune_below))
-            else:
-                merged = delta
-            sinks.write_swap(merged, path)
+
+        def merge(stored):
+            if stored is None:
+                return delta
+            stored = stored.select(
+                key_col, (F.col("decayed") * F.lit(float(decay)))
+                .alias("decayed"))
+            return (stored.unionByName(delta)
+                    .groupBy(key_col)
+                    .agg(F.sum("decayed").alias("decayed"))
+                    .filter(F.col("decayed") >= prune_below))
+
+        sinks.rewrite(spark, path, merge)
 
     return on_batch
 
